@@ -48,7 +48,7 @@ N_PARTS = 128
 N_SHARDS = 32
 SHUFFLE = 128
 N_QUERIES = 5000
-# Overlap depth tuned by BENCH/sustained_sweep.py (round 5, 100k docs,
+# Overlap depth tuned by the round-5 saturation sweep (100k docs,
 # pinned 16 cores): 5000-query batches beat 2500 at every depth (larger
 # batches amortize per-batch stage bubbles), and with enough batches in
 # flight deeper overlap helps (2500x6: conc 6 = 818 q/s vs conc 3 =

@@ -51,7 +51,9 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -219,6 +221,35 @@ def _normalize_input(pages: DataFrame) -> DataFrame:
     return out
 
 
+_DOC_COLS = [
+    "part", "doc_id", "url", "lang", "h1", "h2",
+    "doc_len", "simhash", "instance", "data_sh", "segs",
+    "terms", "tfs", "pos_blob", "pos_offs",
+]
+
+
+def _doc_rows(pages_p: DataFrame, derived: bool) -> DataFrame:
+    """(part, doc_id, url, lang, text) rows -> docs-table rows (``_DOC_COLS``)
+    in ONE fused Arrow UDF pass: terms, tfs, positions, doc_len, simhash
+    AND the JVM row-hash fingerprint columns.  ``derived=False`` runs the
+    lean tokenizer (null similarity columns)."""
+    tok = tok_tf_simhash_udf if derived else tok_tf_lean_udf
+    h1, h2 = _row_hash_cols()
+    enc = pages_p.withColumn("tt", tok("text"))
+    return enc.select(
+        "part", "doc_id", "url", "lang", h1, h2,
+        F.col("tt.doc_len").alias("doc_len"),
+        F.col("tt.simhash").alias("simhash"),
+        instance_expr("text").alias("instance"),
+        F.col("tt.data_sh").alias("data_sh"),
+        F.col("tt.segs").alias("segs"),
+        F.col("tt.terms").alias("terms"),
+        F.col("tt.tfs").alias("tfs"),
+        F.col("tt.pos_blob").alias("pos_blob"),
+        F.col("tt.pos_offs").alias("pos_offs"),
+    )
+
+
 def build_segments(
     spark: SparkSession,
     pages: DataFrame,
@@ -282,7 +313,6 @@ def build_segments(
 
     built: list[int] = []
     groups = [missing[i : i + group_size] for i in range(0, len(missing), group_size)]
-    h1, h2 = _row_hash_cols()
     for gi, group in enumerate(groups):
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError(f"injected failure before group {gi}")
@@ -295,30 +325,9 @@ def build_segments(
         # hash: hashing k distinct part values into k slots leaves ~1/e of
         # the slots empty and doubles others (birthday collisions), so the
         # tokenize stage ran at ~60% parallelism with 2x stragglers; range
-        # boundaries give ~one part per task.  ONE fused UDF pass writes
-        # the single docs table — terms, tfs, positions, doc_len, simhash
-        # AND the JVM row-hash fingerprint columns in the same job.
-        tok = tok_tf_simhash_udf if derived else tok_tf_lean_udf
-        enc = pg.repartitionByRange(len(group), "part").withColumn(
-            "tt", tok("text")
-        )
-        docs = enc.select(
-            "part",
-            "doc_id",
-            "url",
-            "lang",
-            h1,
-            h2,
-            F.col("tt.doc_len").alias("doc_len"),
-            F.col("tt.simhash").alias("simhash"),
-            instance_expr("text").alias("instance"),
-            F.col("tt.data_sh").alias("data_sh"),
-            F.col("tt.segs").alias("segs"),
-            F.col("tt.terms").alias("terms"),
-            F.col("tt.tfs").alias("tfs"),
-            F.col("tt.pos_blob").alias("pos_blob"),
-            F.col("tt.pos_offs").alias("pos_offs"),
-        )
+        # boundaries give ~one part per task.  ONE fused UDF pass
+        # (_doc_rows) writes the single docs table.
+        docs = _doc_rows(pg.repartitionByRange(len(group), "part"), derived)
         # dynamic partition overwrite -> idempotent retry per group
         docs.write.mode("overwrite").partitionBy("part").parquet(cat.docs)
 
@@ -387,11 +396,15 @@ def build_derived(
     cat: IndexCatalog,
     parts: list[int] | None = None,
     combo2: bool = True,
+    docs: DataFrame | None = None,
 ) -> None:
     """Write/refresh the units + simprints tables from docs.
 
     ``parts=None`` -> full rebuild (clean overwrite of both tables);
     ``parts=[...]`` -> rewrite only those part dirs (upsert/delete path).
+    ``docs`` (with ``parts``) supplies those parts' rows with whole parts
+    per partition (the upsert path's checkpoint): no docs re-read and no
+    per-table range repartition.
     ``combo2=False`` skips the C(14,2) high-threshold band table — its 91
     rows/segment are ~7x the single-band write volume (the Manku-style
     multi-block-permutation trade: storage for high-threshold lookup
@@ -403,7 +416,9 @@ def build_derived(
 
     if parts is not None and not parts:
         return
-    docs = spark.read.parquet(cat.docs)
+    aligned = docs is not None
+    if docs is None:
+        docs = spark.read.parquet(cat.docs)
     if parts is not None:
         # maintenance rewrites what exists; never resurrects a skipped tier
         combo2 = combo2 and os.path.isdir(cat.simprint_bands2)
@@ -419,11 +434,15 @@ def build_derived(
         n = max(len(_read_checkpoint_rows(spark, cat)), 1)
     else:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        docs = docs.filter(F.col("part").isin(list(parts)))
+        if not aligned:
+            docs = docs.filter(F.col("part").isin(list(parts)))
         n = max(len(parts), 1)
         for p in parts:  # clear affected dirs (a part may become empty)
             for t in tables:
                 shutil.rmtree(os.path.join(t, f"part={p}"), ignore_errors=True)
+
+    def by_part(df: DataFrame) -> DataFrame:
+        return df if aligned else df.repartitionByRange(n, "part")
 
     # The five table writes below share nothing but the docs scan — they
     # are submitted from a small thread pool (guide-§2.6 overlap) so the
@@ -444,7 +463,7 @@ def build_derived(
         (
             "derived: units",
             lambda: (
-                units.repartitionByRange(n, "part")
+                by_part(units)
                 .sortWithinPartitions("part", "content_sh")
                 .write.mode("overwrite")
                 .partitionBy("part")
@@ -466,7 +485,7 @@ def build_derived(
         (
             "derived: simprints",
             lambda: (
-                sp.repartitionByRange(n, "part")
+                by_part(sp)
                 .sortWithinPartitions("part", "simhash")
                 .write.mode("overwrite")
                 .partitionBy("part")
@@ -518,7 +537,7 @@ def build_derived(
         (
             "derived: unit_bands",
             lambda: (
-                ub.repartitionByRange(n, "part")
+                by_part(ub)
                 .sortWithinPartitions("part", "band", "key")
                 .write.mode("overwrite")
                 .partitionBy("part")
@@ -550,7 +569,7 @@ def build_derived(
         (
             "derived: simprint_bands",
             lambda: (
-                sb.repartitionByRange(n, "part")
+                by_part(sb)
                 .sortWithinPartitions("part", "band", "key")
                 .write.mode("overwrite")
                 .partitionBy("part")
@@ -817,6 +836,11 @@ def corpus_stats_from_checkpoints(
     return n_docs, (total_dl / n_docs if n_docs else 0.0)
 
 
+def _shard_expr(col: str, n_shards: int):
+    """Doc-hash shard of ``col`` (JVM xxhash64)."""
+    return F.pmod(F.xxhash64(col), F.lit(n_shards)).cast("int")
+
+
 def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFrame:
     """docs -> one row per (doc, term) posting: (shard, tgroup, term,
     doc_id, tf, doc_len, pos).  Per-posting positions are a JVM substring
@@ -838,7 +862,7 @@ def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFram
             ).alias("z"),
         )
         .select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+            _shard_expr("doc_id", n_shards).alias("shard"),
             F.pmod(F.xxhash64("z.term"), F.lit(cfg.build_fanout))
             .cast("int")
             .alias("tgroup"),
@@ -850,6 +874,16 @@ def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFram
             .substr(F.col("z.o0") + F.lit(1), F.col("z.o1") - F.col("z.o0"))
             .alias("pos"),
         )
+    )
+
+
+def _encode_blocks(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFrame:
+    """docs -> encoded posting blocks (POSTINGS_SCHEMA), one encoder call
+    per (shard, tgroup)."""
+    return (
+        _posting_rows(docs, n_shards, cfg)
+        .groupBy("shard", "tgroup")
+        .applyInPandas(_encode_blocks_fn(cfg), POSTINGS_SCHEMA)
     )
 
 
@@ -938,12 +972,7 @@ def build_postings(
 
     # docs carry doc_len inline (denormalized at stage A) so stage B needs
     # NO join — the term shuffle is the build's only wide dependency
-    docs = spark.read.parquet(cat.docs)
-    blocks = (
-        _posting_rows(docs, n_shards, cfg)
-        .groupBy("shard", "tgroup")
-        .applyInPandas(_encode_blocks_fn(cfg), POSTINGS_SCHEMA)
-    )
+    blocks = _encode_blocks(spark.read.parquet(cat.docs), n_shards, cfg)
     # cache the encoded blocks across the two consumers (postings write +
     # term_stats aggregation): without it term_stats either re-encodes the
     # corpus or re-reads the 512-dir layout it just wrote (driver-bound
@@ -967,319 +996,250 @@ def build_postings(
     return BuildResult(n_docs, avgdl, [], [], secs)
 
 
-# --- incremental update / delete (true B4) ------------------------------------
+# --- incremental update / delete ----------------------------------------------
 # The reference updates an asset by deleting its stale postings and vectors
 # then inserting the new ones inside one LMDB txn (usearch/index.py:337-348,
-# simprint/lmdb_ops.py:84-108).  The Spark analogue: merge the delta into
-# ONLY the affected docs partitions (url-keyed upsert / delete), re-commit
-# their checkpoint fingerprints, and maintain the derived tables
-# incrementally — units/simprints by rewriting the affected url-part dirs,
-# postings by re-encoding ONLY the affected doc-hash shards (old shard
-# blocks are decoded back to posting rows, changed docs dropped, fresh rows
-# merged in, and the shard's (bucket, shard) partition dirs overwritten;
-# term_stats is patched by the old-vs-new shard df diff).  Work scales with
-# |shard| + |delta|, never with the corpus.
-
-_ROWS_SCHEMA = (
-    "shard int, term string, doc_id long, tf long, doc_len long, pos binary"
-)
-
-
-def _blocks_to_rows_fn():
-    """mapInPandas decoder: posting blocks -> per-posting rows, inverse of
-    _encode_blocks_fn (numpy-vectorized per block; the positions payload is
-    re-sliced per posting from the LEB128 code boundaries)."""
-
-    def gen(batches):
-        for pdf in batches:
-            shards, terms, ids, tfs, dls, poss = [], [], [], [], [], []
-            for sh, term, n, min_doc, id_buf, tf_buf, dl_buf, pos_buf in zip(
-                pdf["shard"], pdf["term"], pdf["n"], pdf["min_doc"],
-                pdf["doc_ids"], pdf["tfs"], pdf["dls"], pdf["poss"],
-            ):
-                n = int(n)
-                u0 = np.int64(int(min_doc)).astype(np.uint64) ^ codec._SIGN_BIT
-                d = np.empty(n, dtype=np.uint64)
-                d[0] = u0
-                if n > 1:
-                    d[1:] = u0 + np.cumsum(
-                        codec.for_unpack(id_buf, n - 1), dtype=np.uint64
-                    )
-                d = (d ^ codec._SIGN_BIT).view(np.int64)
-                tf = codec.for_unpack(tf_buf, n).view(np.int64)
-                dl = codec.for_unpack(dl_buf, n).view(np.int64)
-                # positions: LEB128 codes end at bytes with the high bit
-                # clear; posting p owns tf[p] consecutive codes
-                b = np.frombuffer(pos_buf, dtype=np.uint8)
-                ends = np.flatnonzero((b & 0x80) == 0) + 1
-                cum_tf = np.cumsum(tf)
-                pe = ends[cum_tf - 1]
-                ps = np.concatenate([[0], pe[:-1]])
-                poss.extend(bytes(pos_buf[s:e]) for s, e in zip(ps, pe))
-                shards.append(np.full(n, int(sh), dtype=np.int32))
-                terms.extend([term] * n)
-                ids.append(d)
-                tfs.append(tf)
-                dls.append(dl)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "shard": np.concatenate(shards),
-                    "term": terms,
-                    "doc_id": np.concatenate(ids),
-                    "tf": np.concatenate(tfs),
-                    "doc_len": np.concatenate(dls),
-                    "pos": poss,
-                }
-            )
-
-    return gen
+# simprint/lmdb_ops.py:84-108).  The Spark analogue does each piece of work
+# once:
+#   delta  the new docs are tokenized ONCE into docs rows and checkpointed;
+#   docs   the affected url-part partitions' rows, tagged kept / replaced /
+#          deleted, plus the delta are checkpointed with one whole part per
+#          partition; ONE collect of that frame yields the parts'
+#          checkpoint rows and the changed docs' doc-hash shards and term
+#          buckets, and the frame rewrites the docs partitions;
+#   B | C  the affected shards' postings are re-derived from docs with stage
+#          B's own code on the caller's thread while a pool thread patches
+#          term_stats from the changed docs alone (+1 per (term, new doc),
+#          -1 per (term, old doc); exact, (doc, term) is unique) and
+#          rewrites the parts' stage-C tables from the same checkpoint;
+#   meta   meta.json is written LAST: it is the readers' reload trigger
+#          (IndexReader.ensure_fresh), and a reader that reloaded before
+#          term_stats was done would cache stale df until the next write.
+# Cost: docs is partitioned by url-part but shards by doc hash, so the shard
+# rewrite scans the WHOLE docs table (the terms/tfs/positions columns), not
+# the shards' old blocks — a 1-doc delta reads every doc to rewrite
+# 1/n_shards of the postings, and a delta of more than about
+# n_shards*ln(n_shards) docs touches every shard anyway.  Untouched parts'
+# and shards' files are never rewritten.
 
 
-def _shards_of(spark: SparkSession, doc_ids: list[int], n_shards: int) -> list[int]:
-    """Doc-hash shards of the given ids (tiny Spark job — shard uses the
-    JVM xxhash64, not computable driver-side)."""
-    if not doc_ids:
-        return []
-    df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id long")
-    rows = (
-        df.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("s")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["s"]) for r in rows)
+def _release(*frames: DataFrame) -> None:
+    """Free the blocks of localCheckpoint()ed frames.  The write path runs
+    once per streaming micro-batch for the life of the session, so its
+    checkpoints must not outlive the call."""
+    for df in frames:
+        df._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
+class _Stages:
+    """Spark job labels ("upsert: docs", ...) and ``_metrics`` rows of one
+    upsert/delete call."""
+
+    def __init__(self, spark: SparkSession, op: str, run_id: str):
+        self.sc, self.op, self.run_id = spark.sparkContext, op, run_id
+        self.rows: list[dict] = []
+
+    @contextmanager
+    def __call__(self, name: str):
+        label = f"{self.op}: {name}"
+        prev = self.sc.getLocalProperty("spark.job.description")
+        self.sc.setJobDescription(label)
+        row = {"run_id": self.run_id, "stage": label, "part": -1, "docs": 0, "secs": 0.0}
+        t0 = time.time()
+        try:
+            yield row
+        finally:
+            row["secs"] = time.time() - t0
+            self.sc.setJobDescription(prev)
+            self.rows.append(row)
 
 
 def update_postings_incremental(
     spark: SparkSession,
     cat: IndexCatalog,
     cfg: EngineConfig,
-    changed_ids: list[int],
-    parts: list[int],
-    run_id: str = "update",
+    shards: list[int],
 ) -> list[int]:
-    """Re-encode ONLY the doc-hash shards containing changed docs.
-
-    Steps (delete-stale-then-insert, usearch/index.py:337-348):
-    1. snapshot the affected shards' per-(bucket, term) df (old state);
-    2. decode the affected shards' blocks to rows, drop changed doc_ids,
-       union fresh rows of the changed docs (read from the affected
-       url-part dirs only), re-encode per (shard, tgroup);
-    3. clear the affected shard partition dirs and rewrite them;
-    4. patch term_stats with the old/new df diff (affected buckets only);
-    5. refresh meta corpus stats from the re-committed checkpoints.
-    Untouched shards' files are never rewritten (mtime-stable).
-    Returns the affected shard list.
-    """
-    import os
+    """Stage B for a subset of doc-hash shards: re-derive their postings
+    from the docs table with stage B's own code and overwrite their
+    (bucket, shard) dirs.  The plan reads docs, never the postings dirs it
+    clears, so the blocks need no checkpoint.  The scan covers the whole
+    docs table (docs is partitioned by url-part, shards by doc hash),
+    filtered to the shards' docs.  Returns ``shards``."""
+    import glob
     import shutil
 
-    t0 = time.time()
-    if not changed_ids:
+    if not shards:
         return []
-    meta = cat.read_meta()
-    n_shards = int(meta["n_shards"])
-    shards = _shards_of(spark, changed_ids, n_shards)
+    n_shards = int(cat.read_meta()["n_shards"])
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    ids_df = spark.createDataFrame(
-        [(int(i),) for i in sorted(set(changed_ids))], "doc_id long"
-    )
-    shard_sql = ", ".join(str(s) for s in shards)
-
-    # (1) old per-(bucket, term) df of the affected shards — materialized
-    # BEFORE the overwrite invalidates the files the plan reads
-    old_blocks = spark.read.parquet(cat.postings).filter(f"shard IN ({shard_sql})")
-    old_stats = (
-        old_blocks.groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df_old"))
-        .localCheckpoint()
-    )
-
-    # (2) surviving old rows + fresh rows of the changed docs
-    old_rows = (
-        old_blocks.mapInPandas(_blocks_to_rows_fn(), _ROWS_SCHEMA)
-        .join(F.broadcast(ids_df), "doc_id", "left_anti")
-    )
-    part_sql = ", ".join(str(p) for p in parts)
-    fresh_docs = (
-        spark.read.parquet(cat.docs)
-        .filter(f"part IN ({part_sql})" if parts else "false")
-        .join(F.broadcast(ids_df), "doc_id", "left_semi")
-    )
-    fresh_rows = _posting_rows(fresh_docs, n_shards, cfg).drop("tgroup")
-    all_rows = old_rows.unionByName(fresh_rows).withColumn(
-        "tgroup",
-        F.pmod(F.xxhash64("term"), F.lit(cfg.build_fanout)).cast("int"),
-    )
-    blocks = (
-        all_rows.groupBy("shard", "tgroup")
-        .applyInPandas(_encode_blocks_fn(cfg), POSTINGS_SCHEMA)
-        .localCheckpoint()  # materialize before clearing the source dirs
-    )
-
-    # (3) clear + rewrite the affected shard dirs (a shard emptied of some
-    # bucket must not leave stale blocks behind)
-    import glob
-
+    docs = spark.read.parquet(cat.docs)
+    if len(shards) < n_shards:
+        docs = docs.filter(_shard_expr("doc_id", n_shards).isin(shards))
+    blocks = _encode_blocks(docs, n_shards, cfg)
+    # a shard emptied of some bucket must not leave stale blocks behind
     for s in shards:
         for d in glob.glob(os.path.join(cat.postings, "bucket=*", f"shard={s}")):
             shutil.rmtree(d, ignore_errors=True)
-    (
-        blocks.repartition("bucket")
-        .sortWithinPartitions("bucket", "shard", "term", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "shard")
-        .parquet(cat.postings)
-    )
-
-    # (4) term_stats patch: df' = df + (new - old) over affected buckets
-    new_stats = (
-        spark.read.parquet(cat.postings)
-        .filter(f"shard IN ({shard_sql})")
-        .groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df_new"))
-    )
-    delta = (
-        old_stats.join(new_stats, ["bucket", "term"], "full_outer")
-        .select(
-            "bucket",
-            "term",
-            (
-                F.coalesce("df_new", F.lit(0)) - F.coalesce("df_old", F.lit(0))
-            ).alias("d"),
-        )
-        .filter(F.col("d") != 0)
-        .localCheckpoint()
-    )
-    aff_buckets = sorted(
-        int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
-    )
-    if aff_buckets:
-        b_sql = ", ".join(str(b) for b in aff_buckets)
-        stats_new = (
-            spark.read.parquet(cat.term_stats)
-            .filter(f"bucket IN ({b_sql})")
-            .join(delta, ["bucket", "term"], "full_outer")
-            .select(
-                "bucket",
-                "term",
-                (F.coalesce("df", F.lit(0)) + F.coalesce("d", F.lit(0))).alias("df"),
-            )
-            .filter(F.col("df") > 0)
-            .localCheckpoint()
-        )
-        live = {
-            int(r["bucket"])
-            for r in stats_new.select("bucket").distinct().collect()
-        }
-        for b in aff_buckets:  # bucket lost its last term -> drop its dir
-            if b not in live:
-                shutil.rmtree(
-                    os.path.join(cat.term_stats, f"bucket={b}"), ignore_errors=True
-                )
-        if live:
-            (
-                stats_new.repartition("bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(cat.term_stats)
-            )
-    # prune bucket dirs emptied of every shard dir
+    _write_blocks(blocks, cat.postings, cfg.term_buckets, n_shards)
     for d in glob.glob(os.path.join(cat.postings, "bucket=*")):
         if not any(e.startswith("shard=") for e in os.listdir(d)):
             shutil.rmtree(d, ignore_errors=True)
-
-    # (5) refresh corpus stats
-    n_docs, avgdl = corpus_stats_from_checkpoints(spark, cat)
-    _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, run_id)
-    _append_metrics(
-        cat,
-        [{"run_id": run_id, "stage": "postings_incr", "part": -1,
-          "docs": len(changed_ids), "secs": time.time() - t0}],
-    )
     return shards
 
 
-_DOC_COLS = [
-    "part", "doc_id", "url", "lang", "h1", "h2",
-    "doc_len", "simhash", "instance", "data_sh", "segs",
-    "terms", "tfs", "pos_blob", "pos_offs",
-]
+def _patch_term_stats(
+    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig,
+    changed: DataFrame, buckets: list[int],
+) -> None:
+    """df += ``_v`` per (term, changed doc) over the affected buckets.  The
+    patched buckets are checkpointed before their dirs are cleared (the
+    plan reads them); a bucket left without terms is not rewritten."""
+    import shutil
+
+    if not buckets:
+        return
+    ones = changed.select(
+        F.explode("terms").alias("term"), F.col("_v").cast("long").alias("df")
+    ).withColumn("bucket", bucket_expr("term", cfg.term_buckets))
+    patched = (
+        spark.read.parquet(cat.term_stats)
+        .filter(F.col("bucket").isin(buckets))
+        .select("bucket", "term", "df")
+        .unionByName(ones.select("bucket", "term", "df"))
+        .repartition("bucket")
+        .groupBy("bucket", "term")
+        .agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > 0)
+        .sortWithinPartitions("bucket", "term")
+        .localCheckpoint()
+    )
+    try:
+        for b in buckets:
+            shutil.rmtree(os.path.join(cat.term_stats, f"bucket={b}"), ignore_errors=True)
+        patched.write.mode("overwrite").partitionBy("bucket").parquet(cat.term_stats)
+    finally:
+        _release(patched)
 
 
-def _require_ckpt_parts(spark: SparkSession, cat: IndexCatalog) -> tuple[dict, int]:
+def _open_for_write(
+    spark: SparkSession, index_dir: str, op: str
+) -> tuple[IndexCatalog, dict, int, int]:
+    """(catalog, checkpoint rows, n_parts, n_shards) of a committed build."""
+    cat = IndexCatalog(index_dir)
+    if os.path.exists(cat.meta_path):
+        check_format(cat.read_meta(), op)
     ckpt = _read_checkpoint_rows(spark, cat)
     if not ckpt:
         raise ValueError("no committed build to update (empty _checkpoints)")
     n_parts = int(next(iter(ckpt.values()))["n_parts"])
-    return ckpt, n_parts
+    return cat, ckpt, n_parts, int(cat.read_meta()["n_shards"])
 
 
-def _merge_parts(
+def _rewrite(
     spark: SparkSession,
     cat: IndexCatalog,
-    merged: DataFrame,
-    parts: list[int],
+    cfg: EngineConfig,
+    stage: _Stages,
     ckpt: dict[int, dict],
     n_parts: int,
-    run_id: str,
-    stage: str,
+    n_shards: int,
+    parts: list[int],
+    tag: Callable[[DataFrame], DataFrame],
 ) -> None:
-    """Rewrite the affected docs partitions from ``merged`` (already
-    filtered to ``parts``) and re-commit their checkpoint rows."""
-    import os
+    """Apply one upsert/delete.  ``tag`` maps the affected parts' docs
+    rows to those rows plus the delta's, each tagged ``_v`` = +1 (new),
+    -1 (replaced or deleted) or 0 (kept)."""
     import shutil
+    from concurrent.futures import ThreadPoolExecutor
 
+    t0 = time.time()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # materialize BEFORE overwriting the partitions the plan reads from
-    merged = merged.repartitionByRange(max(len(parts), 1), "part").localCheckpoint()
-    live = {int(r["part"]) for r in merged.select("part").distinct().collect()}
-    merged.write.mode("overwrite").partitionBy("part").parquet(cat.docs)
-    for p in sorted(set(parts) - live):  # partition emptied by a delete
-        shutil.rmtree(os.path.join(cat.docs, f"part={p}"), ignore_errors=True)
-        ckpt.pop(p, None)
-    if live:
-        agg = (
-            spark.read.parquet(cat.docs)
-            .filter(F.col("part").isin(sorted(live)))
-            .groupBy("part")
-            .agg(
-                F.bit_xor("h1").alias("hi"),
-                F.bit_xor("h2").alias("lo"),
-                F.count("*").alias("n_docs"),
-                F.sum("doc_len").alias("sum_dl"),
+    keep, changed = F.col("_v") >= 0, F.col("_v") != 0
+    rows = None
+    try:
+        with stage("docs") as st:
+            # one whole part per partition (a direct slot id: no range-sampling
+            # job, no hash collisions), materialized BEFORE the overwrite of
+            # the partitions the plan reads
+            slot = F.array_position(F.array(*map(F.lit, parts)), F.col("part")) - 1
+            rows = (
+                tag(spark.read.parquet(cat.docs).filter(F.col("part").isin(parts)))
+                .repartitionById(len(parts), slot.cast("int"))
+                .localCheckpoint()
             )
-            .collect()
-        )
-        seq = time.time_ns()
-        for r in agg:
-            ckpt[int(r["part"])] = {
-                "part": int(r["part"]),
-                "hi": int(r["hi"]),
-                "lo": int(r["lo"]),
-                "n_docs": int(r["n_docs"]),
-                "sum_dl": int(r["sum_dl"]),
-                "n_parts": n_parts,
-                "seq": seq,
-                "secs": 0.0,
-            }
-    _compact_checkpoints(cat, ckpt)
-    # maintain the derived similarity tables for the same partitions
-    if cat.exists("units") or cat.exists("simprints"):
-        build_derived(spark, cat, parts=parts)
-    _append_metrics(
-        cat,
-        [{"run_id": run_id, "stage": stage, "part": p, "docs": 0, "secs": 0.0}
-         for p in parts],
-    )
+            agg = rows.groupBy("part").agg(
+                F.bit_xor(F.when(keep, F.col("h1"))).alias("hi"),
+                F.bit_xor(F.when(keep, F.col("h2"))).alias("lo"),
+                F.count(F.when(keep, 1)).alias("n_docs"),
+                F.sum(F.when(keep, F.col("doc_len"))).alias("sum_dl"),
+                F.count(F.when(changed, 1)).alias("n_changed"),
+                F.collect_set(F.when(changed, _shard_expr("doc_id", n_shards))).alias("shards"),
+                F.array_distinct(F.flatten(F.collect_list(F.when(changed, F.transform(
+                    "terms", lambda t: bucket_expr(t, cfg.term_buckets)
+                ))))).alias("buckets"),
+            ).collect()
+            merged = rows.filter(keep).select(*_DOC_COLS)
+            merged.write.mode("overwrite").partitionBy("part").parquet(cat.docs)
+            live = {int(r["part"]): r for r in agg if r["n_docs"]}
+            seq = time.time_ns()
+            for p in parts:
+                r = live.get(p)
+                if r is None:  # partition emptied by a delete
+                    shutil.rmtree(os.path.join(cat.docs, f"part={p}"), ignore_errors=True)
+                    ckpt.pop(p, None)
+                    continue
+                ckpt[p] = {
+                    "part": p,
+                    "hi": int(r["hi"]),
+                    "lo": int(r["lo"]),
+                    "n_docs": int(r["n_docs"]),
+                    "sum_dl": int(r["sum_dl"]),
+                    "n_parts": n_parts,
+                    "seq": seq,
+                    "secs": (time.time() - t0) / len(parts),
+                }
+            _compact_checkpoints(cat, ckpt)
+            st["docs"] = n_rewritten = sum(int(r["n_docs"]) for r in live.values())
+        n_changed = sum(int(r["n_changed"]) for r in agg)
+        shards = sorted({int(s) for r in agg for s in r["shards"]})
+        buckets = sorted({int(b) for r in agg for b in r["buckets"]})
+
+        def term_stats():
+            with stage("term_stats") as st:
+                st["docs"] = n_changed
+                _patch_term_stats(spark, cat, cfg, rows.filter(changed), buckets)
+
+        def derived():
+            with stage("derived") as st:
+                st["docs"] = n_rewritten
+                build_derived(spark, cat, parts=parts, docs=merged)
+
+        # stage B on this thread, the term_stats patch and the partial stage C
+        # beside it: all three use the dynamic committer, so the session-level
+        # partitionOverwriteMode cannot race
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            side = [pool.submit(term_stats)]
+            if cat.exists("units") or cat.exists("simprints"):
+                side.append(pool.submit(derived))
+            with stage("postings") as st:
+                st["docs"] = n_changed
+                update_postings_incremental(spark, cat, cfg, shards)
+            for f in side:
+                f.result()
+    finally:
+        if rows is not None:
+            _release(rows)
+    stage.rows.append({"run_id": stage.run_id, "stage": stage.op, "part": -1,
+                       "docs": n_changed, "secs": time.time() - t0})
+    _append_metrics(cat, stage.rows)
+    n_docs, avgdl = corpus_stats_from_checkpoints(spark, cat)
+    _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, stage.run_id)
 
 
 def _dedupe_delta(pages: DataFrame) -> DataFrame:
-    """ONE surviving row per url/doc_id key in an upsert delta.
+    """ONE surviving row per url/doc_id key in an upsert delta, spread over
+    the session's default parallelism (the tokenize pass runs on it).
 
     A batch carrying the same url twice (recrawls or duplicate records in
     a streaming micro-batch) must not insert two docs rows for one key —
@@ -1300,7 +1260,8 @@ def _dedupe_delta(pages: DataFrame) -> DataFrame:
         order.append(F.col("lang").desc())
     w = Window.partitionBy(key).orderBy(*order)
     return (
-        pages.withColumn("_rn", F.row_number().over(w))
+        pages.repartition(pages.sparkSession.sparkContext.defaultParallelism, key)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -1311,62 +1272,44 @@ def upsert_docs(
     pages: DataFrame,
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
-    n_shards: int | None = None,
     run_id: str = "upsert",
-    rebuild_postings: bool = True,
-    incremental: bool = True,
 ) -> list[int]:
-    """Upsert a delta batch (url-keyed): replaces existing docs with the
-    same url, inserts new ones, touches ONLY the affected url-part dirs
-    (docs, units, simprints) and the affected doc-hash shards (postings) —
-    work scales with the delta + its shards, never the corpus.  Set
-    ``incremental=False`` to force a full stage-B rebuild instead.
-    Returns the affected part list."""
-    cat = IndexCatalog(index_dir)
-    if os.path.exists(cat.meta_path):
-        check_format(cat.read_meta(), "upsert_docs")
-    ckpt, n_parts = _require_ckpt_parts(spark, cat)
-    h1, h2 = _row_hash_cols()
-    delta = _normalize_input(_dedupe_delta(pages)).withColumn(
-        "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-    )
-    key_rows = delta.select("part", "doc_id").distinct().collect()
-    parts = sorted({int(r["part"]) for r in key_rows})
-    changed_ids = sorted({int(r["doc_id"]) for r in key_rows})
-    # match the index's build mode: a lean (postings-only) index must not
-    # gain a few derived-valued docs mid-stream
-    tok = tok_tf_simhash_udf if cat.exists("units") else tok_tf_lean_udf
-    enc = delta.repartition(max(len(parts), 1), "part").withColumn(
-        "tt", tok("text")
-    )
-    new_docs = enc.select(
-        "part", "doc_id", "url", "lang", h1, h2,
-        F.col("tt.doc_len").alias("doc_len"),
-        F.col("tt.simhash").alias("simhash"),
-        instance_expr("text").alias("instance"),
-        F.col("tt.data_sh").alias("data_sh"),
-        F.col("tt.segs").alias("segs"),
-        F.col("tt.terms").alias("terms"),
-        F.col("tt.tfs").alias("tfs"),
-        F.col("tt.pos_blob").alias("pos_blob"),
-        F.col("tt.pos_offs").alias("pos_offs"),
-    )
-    existing = (
-        spark.read.parquet(cat.docs)
-        .filter(F.col("part").isin(parts))
-        .join(delta.select("url").distinct(), "url", "left_anti")
-        .select(*_DOC_COLS)
-    )
-    _merge_parts(
-        spark, cat, existing.unionByName(new_docs.select(*_DOC_COLS)),
-        parts, ckpt, n_parts, run_id, "upsert",
-    )
-    if rebuild_postings:
-        if incremental:
-            update_postings_incremental(spark, cat, cfg, changed_ids, parts, run_id)
-        else:
-            meta = cat.read_meta()
-            build_postings(spark, cat, cfg, n_shards or int(meta["n_shards"]), run_id)
+    """Upsert a delta batch (url-keyed): replace existing docs with the
+    same url and insert new ones.
+
+    The delta is tokenized once.  Only the affected url-part dirs (docs
+    and the stage-C tables) and doc-hash shards (postings) are rewritten,
+    term_stats is patched from the changed docs alone, and meta.json is
+    written last.  The shard rewrite re-derives postings from a scan of
+    the whole docs table, so a call costs one docs scan plus work in the
+    delta and its shards (see the section comment above).  Returns the
+    affected part list."""
+    cat, ckpt, n_parts, n_shards = _open_for_write(spark, index_dir, "upsert_docs")
+    stage = _Stages(spark, "upsert", run_id)
+    with stage("delta") as st:
+        delta = _normalize_input(_dedupe_delta(pages)).withColumn(
+            "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
+        )
+        # match the index's build mode: a lean (postings-only) index must
+        # not gain a few derived-valued docs mid-stream
+        new = _doc_rows(delta, cat.exists("units")).localCheckpoint()
+        part_rows = new.select("part").collect()
+        st["docs"] = len(part_rows)
+    parts = sorted({int(r["part"]) for r in part_rows})
+
+    def tag(old: DataFrame) -> DataFrame:
+        return (
+            old.join(F.broadcast(new.select("doc_id", F.lit(-1).alias("_v"))),
+                     "doc_id", "left")
+            .select(*_DOC_COLS, F.coalesce("_v", F.lit(0)).alias("_v"))
+            .unionByName(new.withColumn("_v", F.lit(1)))
+        )
+
+    try:
+        if parts:
+            _rewrite(spark, cat, cfg, stage, ckpt, n_parts, n_shards, parts, tag)
+    finally:
+        _release(new)
     return parts
 
 
@@ -1375,43 +1318,29 @@ def delete_docs(
     urls: list[str],
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
-    n_shards: int | None = None,
     run_id: str = "delete",
-    rebuild_postings: bool = True,
-    incremental: bool = True,
 ) -> list[int]:
-    """Delete documents by url from the affected partitions, maintaining
-    postings/units/simprints incrementally (see upsert_docs).  Returns the
-    affected part list."""
-    cat = IndexCatalog(index_dir)
-    if os.path.exists(cat.meta_path):
-        check_format(cat.read_meta(), "delete_docs")
-    ckpt, n_parts = _require_ckpt_parts(spark, cat)
-    dead = spark.createDataFrame([(u,) for u in urls], "url string").withColumn(
-        "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-    )
-    parts = sorted(int(r["part"]) for r in dead.select("part").distinct().collect())
-    affected = (
-        spark.read.parquet(cat.docs)
-        .filter(F.col("part").isin(parts))
-        .join(dead.select("url"), "url", "left_semi")
-        .select("doc_id")
-        .collect()
-    )
-    changed_ids = sorted({int(r["doc_id"]) for r in affected})
-    kept = (
-        spark.read.parquet(cat.docs)
-        .filter(F.col("part").isin(parts))
-        .join(dead.select("url"), "url", "left_anti")
-        .select(*_DOC_COLS)
-    )
-    _merge_parts(spark, cat, kept, parts, ckpt, n_parts, run_id, "delete")
-    if rebuild_postings:
-        if incremental:
-            update_postings_incremental(spark, cat, cfg, changed_ids, parts, run_id)
-        else:
-            meta = cat.read_meta()
-            build_postings(spark, cat, cfg, n_shards or int(meta["n_shards"]), run_id)
+    """Delete documents by url, maintaining postings, term_stats and the
+    stage-C tables incrementally (see upsert_docs).  Returns the affected
+    part list."""
+    cat, ckpt, n_parts, n_shards = _open_for_write(spark, index_dir, "delete_docs")
+    stage = _Stages(spark, "delete", run_id)
+    urls = sorted(set(urls))
+    with stage("delta") as st:
+        st["docs"] = len(urls)
+        parts = sorted({
+            int(r[0])
+            for r in spark.createDataFrame([(u,) for u in urls], "url string")
+            .select(F.pmod(F.xxhash64("url"), F.lit(n_parts)))
+            .collect()
+        })
+    if parts:
+        _rewrite(
+            spark, cat, cfg, stage, ckpt, n_parts, n_shards, parts,
+            lambda old: old.select(
+                *_DOC_COLS, F.when(F.col("url").isin(urls), -1).otherwise(0).alias("_v")
+            ),
+        )
     return parts
 
 

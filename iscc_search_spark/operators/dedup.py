@@ -67,7 +67,7 @@ def _shingles_expr(text_col: str, n: int):
     )).otherwise(F.array().cast("array<string>"))
 
 
-def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
+def _minhash_sig_udf(n_perm: int, ngram: int, seed: int, overflow_at: int = 2**62):
     """Arrow-batched text -> minhash signature (array of n_perm longs, or
     null for docs with no shingles).
 
@@ -78,7 +78,9 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
     + conv per occurrence, measured 83 s of CPU at 50k docs / 50M
     occurrences vs ~2 s here).  Shingles are factorized as integer
     token-code windows; the shingle STRING is only materialized once per
-    unique shingle to feed md5."""
+    unique shingle to feed md5.  A batch whose ``v**ngram`` shingle-code
+    space reaches ``overflow_at`` (int64 headroom) is refactorized per
+    step instead."""
     import numpy as np
 
     from iscc_search_spark.functions.hashing import (
@@ -123,7 +125,7 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
             - win_off[wdoc]
             + doc_off[wdoc]
         )
-        if ngram == 1 or float(v) ** ngram < 2**62:
+        if ngram == 1 or float(v) ** ngram < overflow_at:
             comb = codes[starts]
             for j in range(1, ngram):
                 comb = comb * v + codes[starts + j]
@@ -144,7 +146,7 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
         gu, ginv = np.unique(cb, return_inverse=True)
         if ngram == 1:
             strs = [uniq_tokens[int(g)] for g in gu]
-        elif float(v) ** ngram < 2**62:
+        elif float(v) ** ngram < overflow_at:
             strs = []
             for g in gu.tolist():
                 parts = []
@@ -155,6 +157,8 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
         else:
             strs = []
             for g in gu.tolist():
+                # g indexes the last level's unique keys, not a key
+                g = int(levels[-1][g])
                 parts = [uniq_tokens[g % v]]
                 g //= v
                 for lu in reversed(levels[:-1]):

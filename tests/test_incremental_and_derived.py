@@ -237,6 +237,69 @@ def test_upsert_touches_only_affected_shard(spark, pages_df, built):
     assert untouched and all(before[p] == after[p] for p in untouched)
 
 
+def _assert_matches_rebuild(spark, d: str, ref_dir: str) -> None:
+    """Postings block rows, term_stats rows and meta corpus stats equal a
+    fresh stage B over a copy of the same docs table."""
+    import shutil
+
+    from iscc_search_spark.operators.build import POSTINGS_SCHEMA, build_postings
+
+    cat, ref = IndexCatalog(d), IndexCatalog(ref_dir)
+    shutil.copytree(cat.docs, ref.docs)
+    shutil.copytree(cat.checkpoints, ref.checkpoints)
+    build_postings(spark, ref, CFG, n_shards=4)
+
+    def rows(path, cols):
+        return sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
+
+    cols = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
+    assert rows(cat.postings, cols) == rows(ref.postings, cols)
+    stats = ["bucket", "term", "df"]
+    assert rows(cat.term_stats, stats) == rows(ref.term_stats, stats)
+    m, mr = cat.read_meta(), ref.read_meta()
+    assert (m["n_docs"], m["avgdl"]) == (mr["n_docs"], mr["avgdl"])
+
+
+def test_incremental_equals_rebuild(spark, pages_df, built, tmp_path):
+    schema = "url string, text string, lang string"
+    cat = IndexCatalog(built)
+    urls = sorted(r["url"] for r in pages_df.select("url").collect())
+    # replace three docs and add two with a private vocabulary
+    delta = spark.createDataFrame(
+        [(u, f"replaced body {i} t00001 t00002", "en") for i, u in enumerate(urls[:3])]
+        + [("http://new.test/a", "qqkeep qqdrop qqkeep", "en"),
+           ("http://new.test/b", "qqkeep qqother", "en")],
+        schema,
+    )
+    upsert_docs(spark, delta, built, cfg=CFG)
+    # new text that drops a term from the vocabulary
+    upsert_docs(
+        spark, spark.createDataFrame([("http://new.test/a", "qqkeep qqkeep", "en")], schema),
+        built, cfg=CFG,
+    )
+    terms = {r["term"] for r in spark.read.parquet(cat.term_stats).collect()}
+    assert "qqkeep" in terms and "qqdrop" not in terms
+    _assert_matches_rebuild(spark, built, str(tmp_path / "ref1"))
+
+    # deleting every original doc leaves two docs with two terms: buckets
+    # empty out
+    n_buckets = len(glob.glob(os.path.join(cat.term_stats, "bucket=*")))
+    delete_docs(spark, urls, built, cfg=CFG)
+    assert len(glob.glob(os.path.join(cat.term_stats, "bucket=*"))) <= 2 < n_buckets
+    _assert_matches_rebuild(spark, built, str(tmp_path / "ref2"))
+
+    # meta.json, the readers' reload trigger, is written after every table
+    meta_t = os.stat(cat.meta_path).st_mtime_ns
+    tables = (
+        cat.docs, cat.postings, cat.term_stats, cat.units, cat.simprints,
+        cat.unit_bands, cat.simprint_bands, cat.simprint_bands2,
+    )
+    for t in tables:
+        for root, _, files in os.walk(t):
+            for f in files:
+                assert os.stat(os.path.join(root, f)).st_mtime_ns <= meta_t, f
+
+
 def test_delete_to_empty_bucket_drops_stale_blocks(spark, tmp_path):
     # two tiny docs with hand-picked vocabularies in DIFFERENT buckets:
     # deleting doc B must remove its bucket dir entirely (a stale block

@@ -93,6 +93,32 @@ def test_minhash_signatures_match_python_reference(docs):
     assert got == expect
 
 
+def test_minhash_overflow_branch_matches_normal_branch(spark):
+    """The large-vocabulary branch (v**ngram past the int64 headroom)
+    refactorizes shingle codes per step; forced here on a 4-token
+    vocabulary, its signatures must equal the normal branch's and the
+    pure-Python ones over {a b c, b c d, c d b, d b c}."""
+    from iscc_search_spark.functions.hashing import (
+        MERSENNE_31,
+        h32_py,
+        minhash_params,
+    )
+    from iscc_search_spark.operators.dedup import _minhash_sig_udf
+
+    n_perm, ngram, seed = 16, 3, 42
+    df = spark.createDataFrame([("a b c d b c",)], "text string")
+    normal = df.select(_minhash_sig_udf(n_perm, ngram, seed)("text")).first()[0]
+    forced = df.select(
+        _minhash_sig_udf(n_perm, ngram, seed, overflow_at=1)("text")
+    ).first()[0]
+    a, b = minhash_params(n_perm, seed)
+    hs = [h32_py(s) % MERSENNE_31 for s in ["a b c", "b c d", "c d b", "d b c"]]
+    expect = [
+        min((h * a[k] + b[k]) % MERSENNE_31 for h in hs) for k in range(n_perm)
+    ]
+    assert forced == normal == expect
+
+
 def test_jaccard_verify_matches_python_reference(docs):
     """array_intersect verify == exact set jaccard on every pair."""
     from iscc_search_spark.operators.dedup import (

@@ -155,3 +155,23 @@ def test_upsert_dedupes_delta_per_url(spark, pages_df, built):
     before = spark.read.parquet(cat.docs).count()
     upsert_docs(spark, delta, built, cfg=CFG)
     assert spark.read.parquet(cat.docs).count() == before == n_docs_after
+
+
+def test_write_path_releases_checkpoints(spark, pages_df, built):
+    """The streaming sink calls upsert_docs once per micro-batch for the
+    life of the session: no checkpoint or persist of the upsert/delete
+    path may outlive its call."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    urls = [r["url"] for r in pages_df.select("url").orderBy("url").limit(3).collect()]
+    for i, url in enumerate(urls):
+        delta = spark.createDataFrame(
+            [(url, f"rewritten body {i} t00001", "en"),
+             (f"http://new.test/{i}", f"inserted page {i}", "en")],
+            "url string, text string, lang string",
+        )
+        upsert_docs(spark, delta, built, cfg=CFG)
+        assert jsc.getPersistentRDDs().size() == before
+    delete_docs(spark, urls[:2], built, cfg=CFG)
+    assert jsc.getPersistentRDDs().size() == before
+    assert IndexCatalog(built).read_meta()["n_docs"] == 201
